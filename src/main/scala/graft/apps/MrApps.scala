@@ -4,45 +4,59 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tokenizer
+import graft.functions.GraftFunctions
 
 /** The reference's eight MapReduce applications re-expressed as declarative
   * DataFrame pipelines (SURVEY.md §2.2/§2.4). Input stand-in corpus is the
   * driver's `documents` table (doc_id, text, lang, source, n_chars) —
   * FIXTURES.md §2.
   *
-  * Every pipeline is pure Catalyst built-ins: the shuffle is a hash
-  * aggregation with map-side partial agg (a strict upgrade over the
-  * reference, which ships raw map output — `src/mr/worker.go:176-190`), and
-  * `collect_list` aggregates use `ObjectHashAggregate` with spill, fixing
-  * the reference's unbounded in-memory grouping (`src/mr/worker.go:103`).
+  * Every pipeline is Catalyst built-ins plus, for tokenizing, the
+  * codegen'd letter-run kernel in [[graft.functions.HashKernels]] (no
+  * regex, no UDF): the shuffle is a hash aggregation with map-side
+  * partial agg (a strict upgrade over the reference, which ships raw map
+  * output — `src/mr/worker.go:176-190`), and `collect_list`/`collect_set`
+  * aggregates use `ObjectHashAggregate` with spill, fixing the
+  * reference's unbounded in-memory grouping (`src/mr/worker.go:103`).
   */
 object MrApps {
 
   /** Word count (reference flagship; map `src/mrapps/wc.go:22-35`, reduce
-    * `wc.go:40-43`): tokenize, emit 1 per occurrence, count per word.
-    * At scale: partial aggregation makes the shuffle carry one row per
-    * (partition, word), not one per occurrence.
+    * `wc.go:40-43`). The map side is one codegen'd letter-run kernel
+    * ([[GraftFunctions.letterRunTfPairs]], the default
+    * [[graft.engine.Tokenizer]] rule) that emits per-document
+    * (word, tf) pairs — a per-document combine, so the explode fans out
+    * one row per (document, distinct word), not one per token. The
+    * reduce sums tf per word (`cnt` stays a bigint). At scale, partial
+    * aggregation makes the shuffle carry one row per (partition, word).
     */
   def wordCount(docs: DataFrame): DataFrame =
     docs
-      .select(Tokenizer.words(col("text")).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
+      .select(explode(GraftFunctions.letterRunTfPairs(col("text"))).as("p"))
+      .groupBy(col("p.word").as("word"))
+      .agg(sum(col("p.tf")).as("cnt"))
 
   /** Inverted index (map `src/mrapps/indexer.go:20-31`, reduce
-    * `indexer.go:36-39`): per-document-distinct words, then per word a
-    * document count + the sorted comma-joined document list.
-    * `distinct()` collapses duplicates before the grouping shuffle.
+    * `indexer.go:36-39`): per word, a document count and the sorted
+    * comma-joined document list. The letter-run kernel's tf pairs are
+    * already the per-document distinct words (the reference's map-side
+    * dedup), so one word-keyed aggregation finishes the job:
+    * `collect_set` drops the same document appearing in several rows.
+    * It also skips a null `doc`, as the document list does, so
+    * `null_doc` adds it back: `n_docs` counts a null document as one
+    * document.
     */
   def invertedIndex(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id").cast("string").as("doc"),
-        Tokenizer.words(col("text")).as("word"))
-      .distinct()
-      .groupBy("word")
+        explode(GraftFunctions.letterRunTfPairs(col("text"))).as("p"))
+      .groupBy(col("p.word").as("word"))
       .agg(
-        count(lit(1)).as("n_docs"),
-        concat_ws(",", sort_array(collect_list(col("doc")))).as("docs"))
+        collect_set(col("doc")).as("ds"),
+        max(col("doc").isNull.cast("long")).as("null_doc"))
+      .select(col("word"),
+        (size(col("ds")).cast("long") + col("null_doc")).as("n_docs"),
+        concat_ws(",", sort_array(col("ds"))).as("docs"))
 
   /** Order-insensitive canonical concat per key (reduce of
     * `src/mrapps/crash.go:45-55` / `nocrash.go:37-47`): sort group values,

@@ -120,7 +120,10 @@ object Formats {
     * The merge-join hint keeps the demonstration honest at test SF
     * (AQE would broadcast the small side and hide the co-location). */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfTag = new java.io.File(sfDir).getName.replace('.', '_')
+    // Table names are unquoted identifiers: any character outside
+    // [A-Za-z0-9_] in the directory name ('-', '.', ' ') would fail the
+    // write with INVALID_IDENTIFIER.
+    val sfTag = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9_]", "_")
     val oTbl = s"graft_b_orders_$sfTag"
     val lTbl = s"graft_b_lineitem_$sfTag"
     val dir = scratch(sfDir, "bucketed")

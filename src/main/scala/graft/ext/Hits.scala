@@ -64,12 +64,16 @@ object Hits {
     * only force a worse plan; above it the score frames outgrow
     * broadcast and the rounds fall back to edge-sorting sort-merge
     * joins. */
-  private def shjRoundGate(spark: SparkSession, sfDir: String): Boolean = {
-    val gate = spark.conf.getOption("spark.graft.graph.shjRoundRowGate")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_GATE"))
-      .map(_.toLong).getOrElse(100000000L)
-    graft.Tables.lineitemRowsMemo(spark, sfDir) >= gate
-  }
+  private def shjRoundGate(spark: SparkSession, sfDir: String): Boolean =
+    graft.Tables.lineitemRowsMemo(spark, sfDir) >= shjRoundRowGate(spark)
+
+  /** The gate's row threshold: conf key, else env var, else 10⁸; a value
+    * that does not parse falls back to 10⁸ ([[graft.Knobs]]). */
+  private[graft] def shjRoundRowGate(spark: SparkSession,
+      env: Map[String, String] = sys.env): Long =
+    graft.Knobs.long("spark.graft.graph.shjRoundRowGate",
+      spark.conf.getOption("spark.graft.graph.shjRoundRowGate")
+        .orElse(env.get("SPARK_GRAFT_GRAPH_GATE")), 100000000L)
 
   /** Past the gate: the per-round joins hint SHUFFLE_HASH on the
     * node-score side. Below the gate those joins broadcast the score

@@ -268,6 +268,15 @@ object Sketches {
     * broadcast threshold, the two dials this trade actually hangs on). */
   private val BloomFactRowGateDefault = 100000000L
 
+  /** The Bloom pre-filter's fact-row gate: conf key, else env var, else
+    * [[BloomFactRowGateDefault]]; a value that does not parse falls back
+    * to the default ([[graft.Knobs]]). */
+  private[graft] def bloomFactRowGate(spark: SparkSession,
+      env: Map[String, String] = sys.env): Long =
+    graft.Knobs.long("spark.graft.bloom.factRowGate",
+      spark.conf.getOption("spark.graft.bloom.factRowGate")
+        .orElse(env.get("SPARK_GRAFT_BLOOM_GATE")), BloomFactRowGateDefault)
+
   /** Input-size-gated Bloom pre-filter for a fact ⋈ selective-dim
     * equi-join (guide §3.2: reduce the big side BEFORE shuffling it).
     *
@@ -290,10 +299,7 @@ object Sketches {
     * oracle, which never sees the bloom, pins it at the gate SFs). */
   private[graft] def maybeBloomPrefilter(spark: SparkSession, sfDir: String,
       fact: DataFrame, factKey: String, dimKeys: DataFrame): DataFrame = {
-    val gate = spark.conf.getOption("spark.graft.bloom.factRowGate")
-      .orElse(sys.env.get("SPARK_GRAFT_BLOOM_GATE"))
-      .map(_.toLong).getOrElse(BloomFactRowGateDefault)
-    if (graft.Tables.lineitemRowsMemo(spark, sfDir) < gate) fact
+    if (graft.Tables.lineitemRowsMemo(spark, sfDir) < bloomFactRowGate(spark)) fact
     else {
       val keys = dimKeys.toDF("k").localCheckpoint()
       val mBits = adaptiveBloomBits(keys.count())

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumn, SparkSession}
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -131,6 +132,36 @@ object GraftExpressions {
         input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.wordTokens($c)")
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** Tf-pair and token arrays of the case-preserving Unicode-letter
+    * runs ([[HashKernels.letterRunTfPairs]] / [[HashKernels.letterRunTokens]]). */
+  case class LetterRunTfPairs(child: Expression)
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("word", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))), containsNull = false)
+    override def prettyName: String = "graft_letter_run_tf_pairs"
+    override protected def nullSafeEval(input: Any): Any =
+      HashKernels.letterRunTfPairs(
+        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.letterRunTfPairs($c)")
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  case class LetterRunTokens(child: Expression)
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def prettyName: String = "graft_letter_run_tokens"
+    override protected def nullSafeEval(input: Any): Any =
+      HashKernels.letterRunTokens(
+        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.letterRunTokens($c)")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -388,6 +419,8 @@ object GraftExpressions {
       (args => PhraseRuns(args.head, stringArrayLit(args(1), "stops"))),
     "graft_word_tf_pairs" -> (args => WordTfPairs(args.head)),
     "graft_word_tokens" -> (args => WordTokens(args.head)),
+    "graft_letter_run_tf_pairs" -> (args => LetterRunTfPairs(args.head)),
+    "graft_letter_run_tokens" -> (args => LetterRunTokens(args.head)),
     // Bounded top-k aggregate: the k SMALLEST inputs under the input
     // type's natural ordering, as a sorted-ascending array. Spark's own
     // CollectTopK (the nsmallest/nlargest engine) — a
@@ -471,6 +504,14 @@ object GraftFunctions {
     * as [[wordTfPairs]] — use when frequency and positional stats must
     * share one tokenizer. */
   def wordTokens(c: Column): Column = call_function("graft_word_tokens", c)
+  /** Per-document (word, tf) pairs of the case-preserving Unicode-letter
+    * runs. Built from the expression itself, so it needs no prior
+    * [[register]] on the session. */
+  def letterRunTfPairs(c: Column): Column =
+    GraftColumn(GraftExpressions.LetterRunTfPairs(expression(c)))
+  /** Token form of [[letterRunTfPairs]]: the letter runs in document order. */
+  def letterRunTokens(c: Column): Column =
+    GraftColumn(GraftExpressions.LetterRunTokens(expression(c)))
   /** k smallest values of `c` per group, sorted ascending. */
   def topKSmallest(c: Column, k: Int): Column =
     call_function("graft_top_k_smallest", c, lit(k))

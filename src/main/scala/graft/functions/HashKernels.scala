@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop kernels behind the graft_* Catalyst expressions
@@ -269,6 +270,118 @@ object HashKernels {
       out(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](UTF8String.fromString(e.getKey), e.getValue.longValue))
       j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** Byte ranges of the case-preserving Unicode-letter runs of `s`, as
+    * packed (start, end) offset pairs in document order — the one scan
+    * behind [[letterRunTfPairs]] and [[letterRunTokens]], and the
+    * compiled twin of `split(text, "[^\\p{L}]+")` minus empty tokens
+    * (the reference's `strings.FieldsFunc(contents, !unicode.IsLetter)`,
+    * `src/mrapps/wc.go:22-35`). ASCII bytes are tested inline; a
+    * multi-byte sequence is decoded and tested with `Character.isLetter`
+    * (general category L, the regex's `\p{L}`). A byte that does not
+    * start a well-formed UTF-8 sequence (stray continuation, overlong
+    * form, surrogate, truncation, past U+10FFFF) is a separator, as the
+    * U+FFFD it decodes to in `UTF8String.toString` is for the split. */
+  private def letterRuns(s: UTF8String): Array[Int] = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var out = new Array[Int](16)
+    var m = 0
+    var start = -1
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i) & 0xff
+      var len = 1
+      val letter =
+        if (b < 0x80) { val lc = b | 0x20; lc >= 'a' && lc <= 'z' }
+        else {
+          val cl = decodeUtf8(base, off, i, n, b)
+          if (cl < 0) false
+          else { len = cl & 7; Character.isLetter(cl >>> 3) }
+        }
+      if (letter) { if (start < 0) start = i }
+      else if (start >= 0) {
+        if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
+        out(m) = start; out(m + 1) = i; m += 2
+        start = -1
+      }
+      i += len
+    }
+    if (start >= 0) {
+      if (m + 2 > out.length) out = java.util.Arrays.copyOf(out, m + 2)
+      out(m) = start; out(m + 1) = n; m += 2
+    }
+    java.util.Arrays.copyOf(out, m)
+  }
+
+  /** Code point and byte length of the well-formed UTF-8 sequence at
+    * byte `i`, whose lead byte `b` is ≥ 0x80, packed as cp << 3 | len;
+    * -1 when the bytes there are not well-formed (Unicode Table 3-7). */
+  private def decodeUtf8(base: AnyRef, off: Long, i: Int, n: Int, b: Int): Int = {
+    def cont(k: Int, lo: Int, hi: Int): Int =
+      if (i + k >= n) -1
+      else {
+        val c = Platform.getByte(base, off + i + k) & 0xff
+        if (c < lo || c > hi) -1 else c & 0x3f
+      }
+    if (b >= 0xc2 && b <= 0xdf) {
+      val c1 = cont(1, 0x80, 0xbf)
+      if (c1 < 0) -1 else (((b & 0x1f) << 6 | c1) << 3) | 2
+    } else if (b >= 0xe0 && b <= 0xef) {
+      val c1 = cont(1, if (b == 0xe0) 0xa0 else 0x80, if (b == 0xed) 0x9f else 0xbf)
+      val c2 = if (c1 < 0) -1 else cont(2, 0x80, 0xbf)
+      if (c2 < 0) -1 else (((b & 0x0f) << 12 | c1 << 6 | c2) << 3) | 3
+    } else if (b >= 0xf0 && b <= 0xf4) {
+      val c1 = cont(1, if (b == 0xf0) 0x90 else 0x80, if (b == 0xf4) 0x8f else 0xbf)
+      val c2 = if (c1 < 0) -1 else cont(2, 0x80, 0xbf)
+      val c3 = if (c2 < 0) -1 else cont(3, 0x80, 0xbf)
+      if (c3 < 0) -1 else (((b & 0x07) << 18 | c1 << 12 | c2 << 6 | c3) << 3) | 4
+    } else -1
+  }
+
+  /** Per-document term frequencies of the case-preserving Unicode-letter
+    * runs ([[letterRuns]]): (word, tf) structs in order of each word's
+    * first occurrence. The map-side combine of the MapReduce word count
+    * and the per-document distinct words of the inverted index — one
+    * row per (document, distinct word) reaches the explode instead of
+    * one per token. Words are copied out once, when first seen. */
+  def letterRunTfPairs(s: UTF8String): ArrayData = {
+    val runs = letterRuns(s)
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val tf = new java.util.LinkedHashMap[UTF8String, Array[Long]]()
+    var r = 0
+    while (r < runs.length) {
+      val w = UTF8String.fromAddress(base, off + runs(r), runs(r + 1) - runs(r))
+      val c = tf.get(w)
+      if (c == null) tf.put(w.copy(), Array(1L)) else c(0) += 1L
+      r += 2
+    }
+    val out = new Array[AnyRef](tf.size)
+    var k = 0
+    val it = tf.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      out(k) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](e.getKey, e.getValue()(0)))
+      k += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** The case-preserving Unicode-letter runs of `s` in document order,
+    * repeats kept — the token form of [[letterRunTfPairs]]. */
+  def letterRunTokens(s: UTF8String): ArrayData = {
+    val runs = letterRuns(s)
+    val out = new Array[AnyRef](runs.length / 2)
+    var k = 0
+    while (k < out.length) {
+      out(k) = s.copyUTF8String(runs(2 * k), runs(2 * k + 1) - 1)
+      k += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }

@@ -90,10 +90,15 @@ object Streaming {
     * micro-batch carries tens of millions of state rows. Sized from
     * EVENT VOLUME (one partition per ~1M events, floor 8 — the gate-SF
     * value, so the chunk-forced steady-state instrument at sf0.1 keeps
-    * its 8-partition marginal-batch medians) capped at the session's
-    * core count (a state partition pays a RocksDB instance per
-    * operator per batch — width past the cores only multiplies that
-    * fixed cost). Overridable for A/B and production via
+    * its 8-partition marginal-batch medians), capped at
+    * min(32, defaultParallelism). The core-count term: a state
+    * partition pays a RocksDB instance per operator per batch, so width
+    * past the cores only multiplies that fixed cost. The literal 32:
+    * it is the widest setting ever measured (the local[32] A/B below),
+    * and without it a cluster's defaultParallelism (hundreds to
+    * thousands of cores) would open that many RocksDB instances per
+    * operator per batch on an unmeasured bet that the state volume
+    * pays for them. Overridable for A/B and production via
     * SPARK_GRAFT_STREAM_STATE_PARTS. Values are state-partition-
     * invariant (the r16 burn-in pin); the gate/bench small-SF path
     * never takes this tier, so driver-graded numbers are untouched.
@@ -223,9 +228,11 @@ object Streaming {
     * whole corpus in batch 0. Values are batching-invariant: event
     * chunks are time-ordered (the in-order contract's axis), and every
     * per-doc/per-hash fold in the document streams is batch-commutative
-    * — the gate tier pins the values either way. */
-  private def stageChunks: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STAGE_CHUNKS").map(_.toInt).getOrElse(1)
+    * — the gate tier pins the values either way. A chunk count that is
+    * not a positive integer falls back to 1 ([[graft.Knobs]]). */
+  private[graft] def stageChunks(env: Map[String, String] = sys.env): Int =
+    graft.Knobs.positiveInt("SPARK_GRAFT_STREAM_STAGE_CHUNKS",
+      env.get("SPARK_GRAFT_STREAM_STAGE_CHUNKS"), 1)
 
   /** Streaming reader over a staged directory, honoring the
     * files-per-trigger instrument cap when set. */
@@ -242,7 +249,7 @@ object Streaming {
     * split into doc_id-ranged ordered files. */
   private def stagedChunkable(spark: SparkSession, sfDir: String,
       table: String): String = {
-    val k = stageChunks
+    val k = stageChunks()
     if (k <= 1) staged(sfDir, table)
     else if (table == "events") stagedDaily(spark, sfDir)
     else stagedSrc.computeIfAbsent(s"$sfDir/$table#chunks=$k", { _ =>

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Triage instrument (r18): separate CORES from SHUFFLE PARTITIONS for
@@ -27,7 +29,11 @@ object GraphScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(key)
-    try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
+    // Warm-up only: a failure here is reported, and the timed runs
+    // below still surface it if it persists.
+    try { fn(spark, sfDir).count(); () } catch {
+      case NonFatal(e) => System.err.println(s"[gprobe] $key warm-up failed: $e")
+    }
     graft.ext.Frames.freeSessionState(spark)
     partList.foreach { p =>
       spark.conf.set("spark.sql.shuffle.partitions", p)

@@ -107,4 +107,17 @@ class FormatsSpec extends SparkSpec {
       r.getAs[Long]("b_max") - r.getAs[Long]("b_min") + 1 == bAll
     }, "lex buckets should leave b full-width on independent keys")
   }
+
+  test("bucketed join runs on an input directory whose name is not an identifier") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sf-0.001-copy-")
+    for (t <- Seq("orders", "lineitem"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    val got = ext.Formats.bucketedJoin(spark, dir.toString)
+      .as[(String, Long, Long)].collect().sorted
+    val want = ext.Formats.bucketedJoin(spark, sf)
+      .as[(String, Long, Long)].collect().sorted
+    assert(got.nonEmpty)
+    assert(got.sameElements(want))
+  }
 }

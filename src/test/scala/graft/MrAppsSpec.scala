@@ -66,4 +66,35 @@ class MrAppsSpec extends SparkSpec {
       wc(w) == c.toLong
     })
   }
+
+  /** Every expression in the executed plan, AQE stages included. */
+  private def planExpressions(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    df.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    helper.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect { case e => e }))
+  }
+
+  test("word count and inverted index plans tokenize on the kernel: no split, no filter lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, StringSplit}
+    for ((name, df) <- Seq("mr_wordcount" -> MrApps.wordCount(docs),
+        "mr_inverted_index" -> MrApps.invertedIndex(docs))) {
+      val exprs = planExpressions(df)
+      assert(exprs.exists(_.prettyName == "graft_letter_run_tf_pairs"), name)
+      assert(!exprs.exists(_.isInstanceOf[StringSplit]), name)
+      assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), name)
+      assert(!df.queryExecution.executedPlan.toString.contains("split("), name)
+    }
+  }
+
+  test("invertedIndex: duplicate and null documents keep the distinct-count semantics") {
+    val rows = Seq[(java.lang.Long, String)](
+      (1L, "apple pear"), (1L, "apple"), (2L, "pear pear"),
+      (null, "apple"), (null, "apple kiwi"))
+      .toDF("doc_id", "text")
+    val got = MrApps.invertedIndex(rows).as[(String, Long, String)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got == Map(
+      "apple" -> ((2L, "1")), "pear" -> ((2L, "1,2")), "kiwi" -> ((1L, ""))))
+  }
 }
